@@ -21,6 +21,8 @@ Layout
 - ``streaming``  Structured Streaming ingestion (AvailableNow) + windowed aggs.
 - ``pipelines``  The four reference entry points (ingest/parse/impute/export)
                  as composed DataFrame programs.
+- ``pyworker``   Python-worker fixed cost: unchanged zip archives are not
+                 re-read before every task (CPython < 3.12).
 
 Design rules (100 TB posture)
 -----------------------------
@@ -35,3 +37,9 @@ Design rules (100 TB posture)
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles an engine function imports this package,
+# so this is where the worker-side zip re-read fix gets installed.
+from scraping_jobsdb_spark import pyworker as _pyworker  # noqa: E402
+
+_pyworker.install()

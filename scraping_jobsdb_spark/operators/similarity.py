@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scraping_jobsdb_spark.session import local_df
+
 __all__ = [
     "shingles",
     "minhash_signature",
@@ -1150,10 +1152,7 @@ def kmeans_fit(
 
     for _ in range(max_iter):
         cent_df = F.broadcast(
-            corpus.sparkSession.createDataFrame(
-                cents,
-                "cell int, centroid array<double>",
-            )
+            local_df(corpus.sparkSession, cents, "cell int, centroid array<double>")
         )
         scored = corpus.crossJoin(cent_df).select(
             id_col,
@@ -1204,10 +1203,7 @@ def kmeans_fit(
         updated = {r.cell: [float(x) for x in r.centroid] for r in new_cents.collect()}
         cents = [(c, updated.get(c, prev)) for c, prev in cents]
 
-    return corpus.sparkSession.createDataFrame(
-        cents,
-        "cell int, centroid array<double>",
-    )
+    return local_df(corpus.sparkSession, cents, "cell int, centroid array<double>")
 
 
 def minhash_band_keys_portable(
@@ -2142,7 +2138,8 @@ def kmeans_fit_local(
             members = X[assign == c]
             if len(members):
                 C[c] = members.mean(axis=0)
-    return sample.sparkSession.createDataFrame(
+    return local_df(
+        sample.sparkSession,
         [(int(i), [float(v) for v in C[i]]) for i in range(k)],
         "cell int, centroid array<double>",
     )

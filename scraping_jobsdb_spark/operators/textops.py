@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scraping_jobsdb_spark.session import local_df
+
 __all__ = [
     "tokens",
     "token_count",
@@ -1221,8 +1223,8 @@ def bpe_train(
         # the merged pair's own count is now fully retired by the rewrites
         counts.pop((left, right), None)
 
-    return spark.createDataFrame(
-        merges, "merge_rank int, left string, right string, pair_count bigint"
+    return local_df(
+        spark, merges, "merge_rank int, left string, right string, pair_count bigint"
     )
 
 
@@ -1508,10 +1510,9 @@ def unigram_lm_train(
     kept = {p: counts[p] for p in sorted(singles)} | dict(multi)
     total = sum(c for _, c in sorted(kept.items()))
     spark = docs.sparkSession
-    return spark.createDataFrame(
-        sorted(
-            (p, math.log(c / total), c) for p, c in kept.items()
-        ),
+    return local_df(
+        spark,
+        sorted((p, math.log(c / total), c) for p, c in kept.items()),
         "piece string, logprob double, piece_count bigint",
     )
 

@@ -35,6 +35,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from scraping_jobsdb_spark.operators.checks import null_check, run_checks, unique_check
 from scraping_jobsdb_spark.operators.dedup import dedup_first
 from scraping_jobsdb_spark.operators.incremental import new_rows
+from scraping_jobsdb_spark.session import local_df
 
 Transport = Callable[[str], str]
 
@@ -56,7 +57,7 @@ def build_param_grid(
         for kw in (keywords or DEFAULT_KEYWORDS)
         for lo, hi in (bands or DEFAULT_BANDS)
     ]
-    return spark.createDataFrame(rows, "keyword string, lo int, hi int")
+    return local_df(spark, rows, "keyword string, lo int, hi int")
 
 
 def fetch_html(

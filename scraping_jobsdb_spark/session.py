@@ -89,15 +89,22 @@ def local_df(spark: SparkSession, rows, schema: str):
     """Arrow/JVM-backed DataFrame from a small driver-side row list.
 
     ``spark.createDataFrame(list, ...)`` parallelizes the rows into
-    Python-pickled partitions — every downstream job then pays a
-    Python-worker round trip PER PARTITION (measured ~130 ms each: a
-    ``coalesce(1)`` over the default 32 slices of a 10-row frame stalled
-    ~4 s computing 32 tiny Python partitions sequentially) even though the
-    data is bytes. Routing through pandas hands Spark ONE Arrow batch that
-    lives JVM-side from then on: the same frame coalesces, joins, or
-    writes in ~50 ms. Use this for every codebook-scale side frame
-    (centroids, codebooks, probe-pair lists); value fidelity is preserved
-    (int64 / float64 / lists of float64 cross Arrow exactly).
+    Python-pickled partitions, and every job over them runs one
+    Python-worker request PER PARTITION, even though the data is bytes.
+    Most of each request's cost is fixed, not the rows: before each
+    request PySpark's worker calls ``importlib.invalidate_caches()``, which
+    on CPython 3.11 re-reads every zip archive on the worker's path
+    (``pyspark.zip``'s 16 package importers, py4j): 0.13-0.23 CPU-s per
+    call on a 4-vCPU host. A 10-row frame in 32 slices took 1.7 s to
+    write, and 5.7 s under ``coalesce(1)``. Those requests run in
+    PySpark's plain-RDD worker pool, whose workers never import this
+    package, so ``pyworker``'s fix for that re-read does not reach them.
+    Routing through pandas hands Spark ONE Arrow batch that lives JVM-side
+    from then on and needs no Python worker at all: the same frame writes
+    in ~70 ms. Use this for every codebook-scale side frame (centroids,
+    codebooks, probe-pair lists, parameter grids); value fidelity is
+    preserved (int64 / float64 / strings / lists of float64 cross Arrow
+    exactly).
     """
     import pandas as pd
 

@@ -127,7 +127,7 @@ def main() -> None:
                 stage_metrics[sid]["sh_write"] += sw.get(
                     "Shuffle Bytes Written", 0
                 )
-                stage_metrics[sid]["py_ser_ms"] += m.get(
+                stage_metrics[sid]["deser_ms"] += m.get(
                     "Executor Deserialize Time", 0
                 )
 
@@ -155,7 +155,8 @@ def main() -> None:
                 print(
                     f"    stage {sid:4d} {sdur:6.3f}s {st['tasks']:4d}t "
                     f"run={m['run_ms']:7.0f}ms cpu={m['cpu_ms']:7.0f}ms "
-                    f"gc={m['gc_ms']:5.0f}ms fetch={m['fetch_ms']:5.0f}ms "
+                    f"gc={m['gc_ms']:5.0f}ms deser={m['deser_ms']:5.0f}ms "
+                    f"fetch={m['fetch_ms']:5.0f}ms "
                     f"shR={m['sh_read']/1e6:7.2f}MB shW={m['sh_write']/1e6:7.2f}MB"
                     f"  {st['name']}"
                 )
