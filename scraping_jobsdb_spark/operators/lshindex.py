@@ -1,25 +1,11 @@
-"""Persisted MinHash-LSH signature index for incremental near-dup dedup.
+"""Persisted MinHash/SimHash LSH signature index for incremental near-dup
+dedup.
 
-The near-dup analog of ``operators/fpindex.py FingerprintIndex`` (VERDICT
-r10 item 4): an ongoing ingest pipeline must NOT re-sign its 100 TB corpus
-on every arriving batch, yet before this module only the winnowing
-containment family had an incremental admission path — the MinHash LSH
-family re-derived every corpus signature per run. This module stores the
-corpus band signatures ``(doc_id, band, key)`` in a transactional table
-and maintains the per-bucket size ``(band, key) -> n_docs`` as an
-incrementally-refreshed aggregate view (the hot-bucket guard — the LSH
-analog of the fingerprint index's stop-gram view), so admitting a new
-batch costs
-
-  sign(batch)                                — map-only over the batch
-  + one broadcast probe join into the index  — zero corpus-sized shuffles
-  + append(batch sigs) + O(delta + view) bucket-size refresh
-
-independent of corpus size. Composition of the engine's txn layer
-(``sources/txn.py``), incremental MV layer (``sources/mv.py``), and the
-MinHash LSH family (``operators/similarity.py``) — the signature-level,
-at-scale generalization of the reference's per-run "skip already-scraped
-job ids" anti-join (``airflow/dags/scrape_url.py``, there by exact key).
+The near-dup analog of ``operators/fpindex.py FingerprintIndex`` on the
+shared index lifecycle (``operators/sigindex.py``): the corpus band
+signatures ``(doc_id, band, key)`` under ``path/sigs`` and the per-bucket
+size ``(band, key) -> n_docs`` — the hot-bucket guard — under ``path/bs``.
+Composes the MinHash LSH family (``operators/similarity.py``).
 
 Three hash families share the storage layout, selected at ``create``
 time and pinned in the manifest:
@@ -45,36 +31,21 @@ engines.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scraping_jobsdb_spark.operators.sigindex import SignatureIndex
 from scraping_jobsdb_spark.operators.similarity import (
     minhash_band_keys_portable,
     shingles_sql,
     simhash_fp_frame,
 )
-from scraping_jobsdb_spark.sources.mv import IncrementalAggView
-from scraping_jobsdb_spark.sources.txn import TxnTable
 
 __all__ = [
     "LshSignatureIndex",
     "minhash_band_keys_fast",
     "simhash_band_keys_portable",
 ]
-
-# v1-manifest keys for the index parameters: every writer and every probe
-# must agree on (k, bands, shingle_n, hasher) or band keys stop being
-# comparable across commits.
-_META_KEYS = (
-    "lsh_k",
-    "lsh_bands",
-    "lsh_shingle_n",
-    "lsh_max_bucket",
-    "lsh_hasher",
-    "lsh_id_col",
-)
 
 _HASHERS = ("md5-portable", "xxhash64", "simhash-portable")
 
@@ -165,308 +136,72 @@ def minhash_band_keys_fast(
     )
 
 
-class LshSignatureIndex:
-    """A corpus LSH signature index at ``path``: a ``TxnTable`` of
-    ``(id, band, key)`` MinHash band signatures under ``path/sigs`` plus
-    an ``IncrementalAggView`` of per-bucket document counts under
-    ``path/bs``. Parameters ride the sigs table's v1 manifest."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.sigs_path = os.path.join(path, "sigs")
-        self.bs_path = os.path.join(path, "bs")
-        m = TxnTable(spark, self.sigs_path)._manifest(1)
-        missing = [k for k in _META_KEYS if k not in m]
-        if missing:
-            raise ValueError(
-                f"{self.sigs_path}: not an LSH signature index (v1 "
-                f"manifest lacks {missing})"
-            )
-        self.k = int(m["lsh_k"])
-        self.bands = int(m["lsh_bands"])
-        self.shingle_n = int(m["lsh_shingle_n"])
-        self.max_bucket = int(m["lsh_max_bucket"])
-        self.hasher = str(m["lsh_hasher"])
-        self.id_col = str(m["lsh_id_col"])
-        self._bs_view = IncrementalAggView(
-            spark,
-            self.sigs_path,
-            self.bs_path,
-            group_cols=["band", "key"],
-            measures={"n_docs": ("count", None)},
+def _band_keys(
+    docs: DataFrame,
+    text_col: str,
+    hasher: str,
+    id_col: str,
+    k: int,
+    bands: int,
+    shingle_n: int,
+    **_,
+) -> DataFrame:
+    if hasher not in _HASHERS:
+        raise ValueError(f"hasher must be one of {_HASHERS}, got {hasher!r}")
+    if hasher == "simhash-portable":
+        # k = fingerprint BITS for this family (chunk width = k // bands);
+        # shingle_n is unused — SimHash votes on single tokens
+        return simhash_band_keys_portable(
+            docs, id_col, text_col, bits=k, bands=bands
         )
+    fn = (
+        minhash_band_keys_portable
+        if hasher == "md5-portable"
+        else minhash_band_keys_fast
+    )
+    return fn(docs, id_col, text_col, k=k, bands=bands, shingle_n=shingle_n)
 
-    # ------------------------------------------------------------ lifecycle
 
-    @classmethod
-    def exists(cls, spark: SparkSession, path: str) -> bool:
-        return TxnTable.exists(spark, os.path.join(path, "sigs"))
+class LshSignatureIndex(SignatureIndex):
+    """A corpus LSH signature index at ``path``. Signer: ``_band_keys``
+    under (k, bands, shingle_n, hasher) — map-only. ``hot_buckets`` are
+    buckets holding more than ``max_bucket`` documents: degenerate keys
+    (boilerplate, empty-text signatures) whose quadratic candidate
+    expansion the probe must not pay; the self-contained pairing drops
+    them identically (``minhash_candidate_pairs_portable``
+    ``max_bucket``).
 
-    @classmethod
-    def create(
-        cls,
-        spark: SparkSession,
-        path: str,
-        corpus: DataFrame,
-        *,
-        k: int = 16,
-        bands: int = 4,
-        shingle_n: int = 3,
-        max_bucket: int = 64,
-        hasher: str = "md5-portable",
-        text_col: str = "text",
-        id_col: str = "doc_id",
-    ) -> "LshSignatureIndex":
-        """Sign ``corpus`` once (map-only — see
-        ``minhash_band_keys_portable``) and persist the index. One pass
-        over the corpus, ever; every later batch pays only its own size."""
-        if hasher not in _HASHERS:
-            raise ValueError(f"hasher must be one of {_HASHERS}, got {hasher!r}")
-        sigs = _band_keys(
-            corpus, hasher, id_col, text_col, k, bands, shingle_n
-        )
-        TxnTable.create(
-            spark,
-            os.path.join(path, "sigs"),
-            sigs,
-            meta={
-                "lsh_k": int(k),
-                "lsh_bands": int(bands),
-                "lsh_shingle_n": int(shingle_n),
-                "lsh_max_bucket": int(max_bucket),
-                "lsh_hasher": str(hasher),
-                "lsh_id_col": str(id_col),
-            },
-        )
-        idx = cls(spark, path)
-        idx._bs_view.refresh()
-        return idx
+    Verdict: one row per batch doc — ``(id, n_bands_hit, n_cand, kept)``
+    where ``n_cand`` counts distinct stored documents sharing ≥1 non-hot
+    band bucket with the doc, ``n_bands_hit`` counts the doc's bands that
+    collided at all, and ``kept`` = no collision. Candidate semantics,
+    deliberately: LSH asserts similarity only probabilistically, so a
+    pipeline needing verified near-dups joins the dropped docs'
+    candidates back to the corpus store for an exact check
+    (``ngram_jaccard``) — the index's job is to make that candidate set
+    batch-sized instead of corpus-sized."""
 
-    # ------------------------------------------------------------- maintain
+    KIND = "an LSH signature index"
+    TABLE, VIEW, PREFIX, APP = "sigs", "bs", "lsh", "lshindex"
+    PARAMS = {
+        "k": 16,
+        "bands": 4,
+        "shingle_n": 3,
+        "max_bucket": 64,
+        "hasher": "md5-portable",
+        "id_col": "doc_id",
+    }
+    KEYS, COUNT, LIMIT = ["band", "key"], "n_docs", "max_bucket"
+    _sign = staticmethod(_band_keys)
 
-    def sign(self, docs: DataFrame, text_col: str = "text") -> DataFrame:
-        """``docs``' band signatures ``(id, band, key)`` under THIS
-        index's pinned (k, bands, shingle_n, hasher) parameters — the
-        exact frame every write/probe path derives internally. Public so
-        a caller composing probe-then-add over the same batch can
-        materialize the signing ONCE (``localCheckpoint``) and hand it to
-        both via ``_sig_b``/``_sigs`` (signing is deterministic per doc,
-        so the shared frame is row-identical to each path's own
-        derivation)."""
-        return self._sign(docs, text_col)
-
-    def add(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        _sigs: DataFrame | None = None,
-    ) -> int:
-        """Admit ``docs`` into the corpus: append their band signatures
-        (transactional — all-or-nothing visibility) and fold the append
-        delta into the bucket-size view. Cost: sign(docs) +
-        O(|delta| + |distinct buckets|) — never a corpus rescan. Returns
-        the new sigs-table version. ``_sigs``: an already-materialized
-        ``sign(docs)`` frame (e.g. shared with a preceding ``probe`` of
-        the same batch) — skips the signing map pass; the caller owns the
-        row-identity."""
-        sigs = self._sign(docs, text_col) if _sigs is None else _sigs
-        t = TxnTable(self.spark, self.sigs_path)
-        t.append(sigs)
-        self._bs_view.refresh()
-        return t.version()
-
-    def add_stream_batch(
-        self,
-        docs: DataFrame,
-        epoch_id: int,
-        app_id: str = "lshindex",
-        text_col: str = "text",
-    ) -> int:
-        """The ``foreachBatch`` body that maintains the index from a
-        stream: an epoch-idempotent ``add`` (exactly-once under
-        failure-recovery replays — a batch whose (app_id, epoch) is
-        already in the sigs table's log appends nothing, and the
-        bucket-size refresh then no-ops on the unchanged version).
-        Returns signature rows appended (0 for a recognized replay).
-        Streaming-equals-batch: N micro-batches through this path leave
-        the index byte-identical to one ``add`` of their union (pinned
-        by test)."""
-        sigs = self._sign(docs, text_col)
-        n = TxnTable(self.spark, self.sigs_path).stream_epoch_append(
-            sigs, app_id, epoch_id
-        )
-        self._bs_view.refresh()
-        return n
-
-    def admit_stream_batch(
-        self,
-        docs: DataFrame,
-        epoch_id: int,
-        app_id: str = "lshindex-admit",
-        text_col: str = "text",
-        _sig_b: DataFrame | None = None,
-    ) -> DataFrame:
-        """ONLINE near-dup admission — the ``foreachBatch`` body of a
-        deduplicating ingest stream: probe the batch against the current
-        index, admit ONLY the surviving (``kept``) documents' signatures,
-        and return the verdict frame so the caller can route kept rows to
-        the corpus sink and dropped rows to a reject log. LSH collisions
-        with anything already admitted — including docs admitted by an
-        EARLIER micro-batch — are rejected; collisions WITHIN a batch
-        survive together (batch-vs-corpus, not batch-vs-self: compose
-        with ``minhash_candidate_pairs_portable`` upstream for
-        intra-batch dedup).
-
-        Exactly-once AND replay-stable: the kept-signature append is
-        epoch-keyed (replays append nothing and the bucket-size refresh
-        no-ops), and the probe excludes corpus signatures carrying the
-        batch's OWN doc ids — on a failure-recovery replay the index
-        already holds the first attempt's kept signatures under the same
-        ids, and without the exclusion every previously-kept doc would
-        collide with itself in every band and flip to dropped, so a
-        caller routing kept rows to the corpus sink would lose those docs
-        on recovery. Contract: doc ids are unique across the stream (a
-        re-sent id is the same document, never a self-duplicate)."""
-        # Sign the batch ONCE and share the materialized signatures
-        # between the probe and the kept-signature append (the r13 form
-        # signed twice: the probe's full-batch pass plus a second
-        # kept-subset pass inside the append's write job — signing is
-        # deterministic per doc, so sign(batch) filtered to kept ids is
-        # row-identical to sign(kept_docs), r14). ``_sig_b`` lets a
-        # caller that ALREADY holds a materialized signature frame for
-        # exactly ``docs`` (row-identical to ``self._sign(docs,
-        # text_col)`` — e.g. an upstream intra-batch dedup stage that
-        # signed the same batch with the index's own parameters) hand it
-        # in, removing the whole signing map pass; the caller owns that
-        # equality (deterministic per-doc signing makes a filtered
-        # superset frame valid).
-        sig_b = (
-            self._sign(docs, text_col).localCheckpoint()
-            if _sig_b is None
-            else _sig_b
-        )
-        verdict = self.probe(
-            docs, text_col=text_col, exclude_self_ids=True, _sig_b=sig_b
-        ).localCheckpoint()
-        kept_ids = verdict.filter(F.col("kept")).select(self.id_col)
-        sigs = sig_b.join(kept_ids, self.id_col, "left_semi")
-        TxnTable(self.spark, self.sigs_path).stream_epoch_append(
-            sigs, app_id, epoch_id
-        )
-        self._bs_view.refresh()
-        return verdict
-
-    def maintain(self, max_files: int = 64) -> int | None:
-        """Compact the sigs table once its snapshot exceeds ``max_files``
-        files (an ingest loop calls this per admitted batch for amortized
-        O(snapshot/max_files) rewrite cost). Compaction is ROW-PRESERVING,
-        so the bucket-size view's next refresh skips it and keeps folding
-        appends incrementally instead of recounting buckets from the
-        whole index. Returns the compacted snapshot's file count, or None
-        if under the threshold."""
-        n = TxnTable(self.spark, self.sigs_path).maybe_compact(
-            max_files=max_files
-        )
-        if n is not None:
-            self._bs_view.refresh()
-        return n
-
-    # ---------------------------------------------------------------- reads
-
-    def signatures(self) -> DataFrame:
-        """The corpus band-signature set ``(id, band, key)`` at the
-        current version."""
-        return TxnTable(self.spark, self.sigs_path).read()
-
-    def hot_buckets(self) -> DataFrame:
-        """Buckets holding more than ``max_bucket`` corpus documents —
-        read from the incrementally-maintained bucket-size view (no
-        corpus scan). These are degenerate keys (boilerplate, empty-text
-        signatures) whose quadratic candidate expansion the probe must
-        not pay; the self-contained pairing drops them identically
-        (``minhash_candidate_pairs_portable`` ``max_bucket``). Small by
-        construction (bounded by |sigs| / max_bucket), so consumers
-        broadcast it."""
-        self._require_fresh_bs()
-        return (
-            self._bs_view.read()
-            .filter(F.col("n_docs") > self.max_bucket)
-            .select("band", "key")
-        )
-
-    def refresh(self) -> None:
-        """Fold any sigs-table commits the bucket-size view hasn't seen
-        (O(delta), no-op when already fresh). add()/add_stream_batch()
-        commit signatures and the view refresh as two separate txns; a
-        crash between them leaves the view stale, and this is the public
-        repair entry point — also called automatically by
-        ``_require_fresh_bs`` so a wedged index self-heals on the next
-        probe()/hot_buckets() instead of raising forever."""
-        self._bs_view.refresh()
-
-    def _require_fresh_bs(self) -> None:
-        # The probe's hot-bucket list must reflect every committed
-        # signature or the pruned universes drift between batches. A
-        # stale view is not an invariant violation, just an interrupted
-        # maintenance step (crash between the sigs append and the view
-        # refresh) — repair it by folding the pending delta now.
-        applied = self._bs_view.applied_source_version()
-        current = TxnTable(self.spark, self.sigs_path).version()
-        if applied < current:
-            self.refresh()
-
-    # ---------------------------------------------------------------- probe
-
-    def probe(
-        self,
-        batch: DataFrame,
-        text_col: str = "text",
-        broadcast_batch: bool = True,
-        exclude_self_ids: bool = False,
-        _sig_b: DataFrame | None = None,
-    ) -> DataFrame:
-        """Score every batch document against the stored corpus: one row
-        per batch doc — ``(id, n_bands_hit, n_cand, kept)`` where
-        ``n_cand`` counts distinct stored documents sharing ≥1 non-hot
-        band bucket with the doc, ``n_bands_hit`` counts the doc's bands
-        that collided at all, and ``kept`` = no collision. Candidate
-        semantics, deliberately: LSH asserts similarity only
-        probabilistically, so a pipeline needing verified near-dups joins
-        the dropped docs' candidates back to the corpus store for an
-        exact check (``ngram_jaccard``) — the index's job is to make that
-        candidate set batch-sized instead of corpus-sized.
-
-        Scale shape: the batch signature set is BROADCAST (a batch is
-        small next to a 100 TB corpus), so the probe join streams over
-        the index scan map-side — the only shuffle moves matched (batch
-        doc, corpus doc) pairs, never the index. The hot-bucket list
-        comes from the maintained bucket-size view (broadcast anti-join
-        on both sides). Set ``broadcast_batch=False`` for a
-        backfill-sized batch; the planner then picks the join strategy.
-        ``exclude_self_ids`` drops corpus signatures whose id appears in
-        the batch itself before scoring — the replay-stability guard
-        ``admit_stream_batch`` relies on."""
-        hot = F.broadcast(self.hot_buckets())
-        # ``_sig_b``: already-materialized batch signatures supplied by
-        # admit_stream_batch (signed once, shared with the kept append);
-        # the hot anti-join over a checkpointed frame is cheap, so only
-        # the standalone path pays its own materialization.
-        sig_b = self._sign(batch, text_col) if _sig_b is None else _sig_b
-        pruned_b = sig_b.join(hot, ["band", "key"], "left_anti").select(
+    def _batch_side(self, pruned_b: DataFrame) -> DataFrame:
+        return pruned_b.select(
             F.col(self.id_col).alias("__bid"), "band", "key"
         )
-        if _sig_b is None:
-            pruned_b = pruned_b.localCheckpoint()
-        if broadcast_batch:
-            pruned_b = F.broadcast(pruned_b)
-        pruned_c = self.signatures().join(hot, ["band", "key"], "left_anti")
-        if exclude_self_ids:
-            pruned_c = pruned_c.join(
-                F.broadcast(batch.select(self.id_col).distinct()),
-                self.id_col,
-                "left_anti",
-            )
+
+    def _verdict(
+        self, batch: DataFrame, pruned_b: DataFrame, pruned_c: DataFrame
+    ) -> DataFrame:
         hits = (
             pruned_b.join(
                 pruned_c.select(
@@ -490,39 +225,3 @@ class LshSignatureIndex:
                 (F.coalesce("n_cand", F.lit(0)) == 0).alias("kept"),
             )
         )
-
-    # -------------------------------------------------------------- helpers
-
-    def _sign(self, docs: DataFrame, text_col: str) -> DataFrame:
-        return _band_keys(
-            docs,
-            self.hasher,
-            self.id_col,
-            text_col,
-            self.k,
-            self.bands,
-            self.shingle_n,
-        )
-
-
-def _band_keys(
-    docs: DataFrame,
-    hasher: str,
-    id_col: str,
-    text_col: str,
-    k: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
-    if hasher == "simhash-portable":
-        # k = fingerprint BITS for this family (chunk width = k // bands);
-        # shingle_n is unused — SimHash votes on single tokens
-        return simhash_band_keys_portable(
-            docs, id_col, text_col, bits=k, bands=bands
-        )
-    fn = (
-        minhash_band_keys_portable
-        if hasher == "md5-portable"
-        else minhash_band_keys_fast
-    )
-    return fn(docs, id_col, text_col, k=k, bands=bands, shingle_n=shingle_n)

@@ -778,11 +778,11 @@ def q_incremental_indexed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derivation — the r14 admit_stream_batch construction, applied to
     # the probe-then-add composition; one signing map pass per batch
     # instead of two, at any scale).
-    fps_b1 = idx.fingerprint(batch1).localCheckpoint()
-    v1 = idx.probe(batch1, threshold_milli=800, _fps_b=fps_b1).withColumn(
+    sig_b1 = idx.sign(batch1).localCheckpoint()
+    v1 = idx.probe(batch1, threshold_milli=800, _sig_b=sig_b1).withColumn(
         "batch_no", F.lit(1).cast("int")
     )
-    idx.add(batch1, _fps=fps_b1)
+    idx.add(batch1, _sigs=sig_b1)
     v2 = idx.probe(batch2, threshold_milli=800).withColumn(
         "batch_no", F.lit(2).cast("int")
     )

@@ -5,6 +5,9 @@ row-preservation, and the xxhash64 hot-path hasher."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -257,13 +260,13 @@ def test_lsh_index_fast_hasher_and_guards(spark, tmp_path):
         )
     )
     sigs_v = TxnTable(spark, idx.sigs_path).version()
-    assert idx._bs_view.applied_source_version() < sigs_v  # genuinely stale
+    assert idx._view.applied_source_version() < sigs_v  # genuinely stale
     healed = _rows(idx.probe(batch2))
-    assert idx._bs_view.applied_source_version() == sigs_v
+    assert idx._view.applied_source_version() == sigs_v
     assert len(healed) == len(got)
     # idempotent explicit repair entry point
     idx.refresh()
-    assert idx._bs_view.applied_source_version() == sigs_v
+    assert idx._view.applied_source_version() == sigs_v
 
     with pytest.raises(ValueError, match="hasher"):
         LshSignatureIndex.create(
@@ -355,3 +358,30 @@ def test_lsh_index_admit_with_presigned_batch_identical(spark, tmp_path):
 
     assert v_plain == v_shared and len(v_plain) > 0
     assert _rows(plain.signatures()) == _rows(shared.signatures())
+
+
+@pytest.mark.parametrize(
+    "built, opened",
+    [("lsh", "fp"), ("fp", "lsh"), (None, "fp"), (None, "lsh")],
+)
+def test_index_open_refuses_wrong_kind(spark, tmp_path, built, opened):
+    """Opening a directory that holds the OTHER index kind, or nothing,
+    raises a ValueError naming the path and the expected kind — never a
+    raw manifest FileNotFoundError."""
+    from scraping_jobsdb_spark.operators.fpindex import FingerprintIndex
+
+    kinds = {
+        "fp": (FingerprintIndex, "not a fingerprint index"),
+        "lsh": (LshSignatureIndex, "not an LSH signature index"),
+    }
+    path = tmp_path / "idx"
+    path.mkdir()
+    if built is not None:
+        corpus = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog")],
+            "doc_id bigint, text string",
+        )
+        kinds[built][0].create(spark, str(path), corpus)
+    cls, message = kinds[opened]
+    with pytest.raises(ValueError, match=re.escape(f"{path}: {message}")):
+        cls(spark, str(path))

@@ -962,9 +962,9 @@ def test_streaming_fingerprint_index_equals_batch(spark, tmp_path):
     want = sorted(map(tuple, batch_idx.probe(probe_batch).collect()))
     assert got == want and len(got) == 40
     # replayed epoch: nothing appended, index state unchanged
-    v = TxnTable(spark, idx.fps_path).version()
+    v = TxnTable(spark, idx.sigs_path).version()
     assert idx.add_stream_batch(seed, epoch_id=0) == 0
-    assert TxnTable(spark, idx.fps_path).version() == v
+    assert TxnTable(spark, idx.sigs_path).version() == v
 
 
 def test_streaming_dedup_admission_rejects_cross_batch_neardups(spark, tmp_path):
@@ -1008,9 +1008,9 @@ def test_streaming_dedup_admission_rejects_cross_batch_neardups(spark, tmp_path)
     # self-id exclusion every previously-kept doc would score 100%
     # contained in itself and flip to dropped (a caller routing kept rows
     # to the corpus sink would lose them on failure recovery)
-    v = TxnTable(spark, idx.fps_path).version()
+    v = TxnTable(spark, idx.sigs_path).version()
     v2_replay = idx.admit_stream_batch(b2, epoch_id=1)
-    assert TxnTable(spark, idx.fps_path).version() == v
+    assert TxnTable(spark, idx.sigs_path).version() == v
     # the routing contract is the kept flag (n_fp may drift slightly: the
     # epoch's own admission can push grams over the stop-gram threshold)
     assert sorted((r.doc_id, r.kept) for r in v2_replay.collect()) == sorted(
@@ -1018,7 +1018,7 @@ def test_streaming_dedup_admission_rejects_cross_batch_neardups(spark, tmp_path)
     )
     # index holds fingerprints for exactly the admitted ids
     admitted = {r.doc_id for r in v1.filter(F.col("kept")).collect()} | kept2
-    indexed = {r.doc_id for r in idx.fingerprints().select("doc_id").distinct().collect()}
+    indexed = {r.doc_id for r in idx.signatures().select("doc_id").distinct().collect()}
     assert indexed <= admitted
     assert len(indexed) >= 0.95 * len(admitted)  # only fingerprint-less (tiny) docs may miss
 
